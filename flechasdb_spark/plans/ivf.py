@@ -20,10 +20,21 @@ async I/O-overlap machinery (A1) is Spark task parallelism.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ByteType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StructField,
+    StructType,
+)
 
 from flechasdb_spark.functions.linalg import (
     lit_double_matrix,
@@ -44,6 +55,7 @@ __all__ = [
 ]
 
 
+import threading
 import weakref
 
 # Plan-CONSTRUCTION memo, not result caching (r13, guide §7.3 driver
@@ -58,14 +70,212 @@ import weakref
 # file-index caching: re-collecting the SAME DataFrame object after its
 # underlying files were rewritten was never well-defined.)
 _PLAN_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+_PLAN_MEMO_LOCK = threading.Lock()
 
 
 def _df_memo(df: DataFrame) -> dict:
-    d = _PLAN_MEMO.get(df)
-    if d is None:
-        d = {}
-        _PLAN_MEMO[df] = d
+    with _PLAN_MEMO_LOCK:
+        d = _PLAN_MEMO.get(df)
+        if d is None:
+            d = {}
+            _PLAN_MEMO[df] = d
     return d
+
+
+# Driver-resident serving state of a CACHED index (the reference's
+# warm path, src/db/stored.rs:262-293: partitions stay in memory after
+# first use, so a query is D table lookups per candidate). Memoized in
+# the same weak per-DataFrame memo: one Arrow collect per cached
+# `encoded` object, dropped with it. Unlike the plan memo above this IS
+# data caching, which is why it is gated on the DataFrame being
+# persisted — Spark's cache already pins the same rows, and
+# ``unpersist()`` turns the path off again.
+@dataclass(frozen=True)
+class _ResidentCodes:
+    """Every encoded row of a cached index, grouped by partition: rows
+    ``bounds[p]:bounds[p + 1]`` of ``ids``/``codes`` are partition p."""
+
+    ids: np.ndarray  # (M,) the id column's integer dtype
+    codes: np.ndarray  # (M, D) narrowest unsigned dtype holding C - 1
+    bounds: np.ndarray  # (max partition id + 2,) int64 row offsets
+
+
+_INTEGRAL = (ByteType, ShortType, IntegerType, LongType)
+# candidate rows scored per NumPy pass: bounds the (rows, D) code
+# gather and its index temporaries at ~100 MB for large batches
+_SCORE_CHUNK_ROWS = 1 << 21
+
+
+def _code_dtype(num_codes: int) -> np.dtype:
+    for dt in (np.uint8, np.uint16):
+        if num_codes - 1 <= np.iinfo(dt).max:
+            return np.dtype(dt)
+    return np.dtype(np.uint32)
+
+
+def _collect_codes(
+    encoded: DataFrame, id_col: str, num_divisions: int, num_codes: int
+) -> _ResidentCodes | None:
+    """One Arrow job: (id, partition_id, codes) of every row, sorted by
+    partition. None when a row is not representable (null id, partition
+    or code, a code list of the wrong length, a code outside 0..C-1) —
+    such an index keeps the Spark plan, whose semantics define those
+    cases."""
+    tab = encoded.select(id_col, "partition_id", "codes").toArrow()
+    ids, pids, codes = (tab.column(i).combine_chunks() for i in range(3))
+    if ids.null_count or pids.null_count or codes.null_count:
+        return None
+    flat = codes.flatten()
+    lens = np.diff(codes.offsets.to_numpy())
+    if flat.null_count or (lens != num_divisions).any():
+        return None
+    code_arr = flat.to_numpy().reshape(-1, num_divisions)
+    pid_arr = pids.to_numpy().astype(np.int64)
+    if len(pid_arr) and (
+        pid_arr.min() < 0 or code_arr.min() < 0 or code_arr.max() >= num_codes
+    ):
+        return None
+    order = np.argsort(pid_arr, kind="stable")
+    bounds = np.zeros(int(pid_arr.max(initial=-1)) + 2, dtype=np.int64)
+    np.cumsum(np.bincount(pid_arr), out=bounds[1:])
+    return _ResidentCodes(
+        ids=ids.to_numpy()[order],
+        codes=code_arr[order].astype(_code_dtype(num_codes)),
+        bounds=bounds,
+    )
+
+
+def _resident_codes(model: IndexModel) -> _ResidentCodes | None:
+    """The driver-resident codes of ``model`` when its index may be
+    served from the driver, else None. Eligible: ``encoded`` persisted,
+    integral ids, and ``num_vectors x (8 + 4 + code bytes)`` within the
+    session's ``spark.sql.autoBroadcastJoinThreshold`` — the size Spark
+    itself already ships to every executor as a broadcast. The first
+    eligible call collects; concurrent first calls wait for that one
+    collect instead of starting their own."""
+    enc, cfg = model.encoded, model.config
+    if not enc.is_cached or not isinstance(
+        enc.schema[cfg.id_col].dataType, _INTEGRAL
+    ):
+        return None
+    row_bytes = 8 + 4 + cfg.num_divisions * _code_dtype(cfg.num_codes).itemsize
+    budget = (
+        enc.sparkSession._jsparkSession.sessionState()
+        .conf()
+        .autoBroadcastJoinThreshold()
+    )
+    if model.num_vectors * row_bytes > budget:
+        return None
+    memo = _df_memo(enc)
+    key = ("resident_codes", cfg.id_col, cfg.num_divisions, cfg.num_codes)
+    if key not in memo:
+        with memo.setdefault("resident_lock", threading.Lock()):
+            if key not in memo:
+                memo[key] = _collect_codes(
+                    enc, cfg.id_col, cfg.num_divisions, cfg.num_codes
+                )
+    return memo[key]
+
+
+def _score_resident(
+    res: _ResidentCodes,
+    tables: np.ndarray,
+    probe_qidx: np.ndarray,
+    probe_pid: np.ndarray,
+    q_n: int,
+    k: int,
+) -> tuple[np.ndarray, ...]:
+    """Per-query top-k over the resident codes of every probed
+    partition: (query position, id, partition_id, distance, rank).
+
+    The ADC sum is the left fold ``s = T[0, c0]; s += T[d, cd]`` in
+    division order — the order of the sql scorer's ``aggregate`` — so
+    distances are bit-identical to it; ranking is (distance, id) like
+    the Spark window. ``probe_qidx`` must be grouped by query in
+    ascending order (both Phase-1 forms emit it so). Queries are scored
+    in chunks of about ``_SCORE_CHUNK_ROWS`` candidates."""
+    n_parts = len(res.bounds) - 1
+    starts = res.bounds[np.minimum(probe_pid, n_parts)]
+    lens = res.bounds[np.minimum(probe_pid + 1, n_parts)] - starts
+    # probe offset of each query, candidates before each probe
+    q_first = np.searchsorted(probe_qidx, np.arange(q_n + 1))
+    before = np.concatenate([[0], np.cumsum(lens)])[q_first]
+    d_n, c_n = tables.shape[1:]
+    flat = tables.reshape(-1)
+    parts = []
+    q0 = 0
+    while q0 < q_n:
+        q1 = max(
+            q0 + 1,
+            int(np.searchsorted(before, before[q0] + _SCORE_CHUNK_ROWS, "right"))
+            - 1,
+        )
+        a, b = q_first[q0], q_first[q1]
+        q0 = q1
+        ln = lens[a:b]
+        n = int(ln.sum())
+        if n == 0:
+            continue
+        tix = np.repeat(np.arange(a, b), ln)
+        rows = np.arange(n) + np.repeat(starts[a:b] - (np.cumsum(ln) - ln), ln)
+        cand = res.codes[rows]
+        base = tix * (d_n * c_n)
+        s = flat[base + cand[:, 0]]
+        for d in range(1, d_n):
+            s += flat[base + (d * c_n) + cand[:, d]]
+        qpos = probe_qidx[tix]
+        ids = res.ids[rows]
+        order = np.lexsort((ids, s, qpos))
+        sorted_q = qpos[order]
+        rank = np.arange(n) - np.searchsorted(sorted_q, sorted_q)
+        keep = rank < k
+        sel = order[keep]
+        parts.append(
+            (qpos[sel], ids[sel], probe_pid[tix[sel]], s[sel], rank[keep] + 1)
+        )
+    if not parts:
+        return (
+            np.empty(0, np.int64),
+            res.ids[:0],
+            np.empty(0, np.int64),
+            np.empty(0),
+            np.empty(0, np.int64),
+        )
+    return tuple(np.concatenate(c) for c in zip(*parts))
+
+
+def _local_result(
+    model: IndexModel, qids: list[int], scored: tuple[np.ndarray, ...]
+) -> DataFrame:
+    """The Spark path's result (schema included) as an Arrow-backed
+    local relation: collecting it runs no Spark job."""
+    import pyarrow as pa
+
+    qpos, ids, pids, dist, rank = scored
+    fields = model.encoded.schema
+    id_field = fields[model.config.id_col]
+    schema = StructType(
+        [
+            StructField("query_id", LongType()),
+            StructField("vector_id", id_field.dataType, id_field.nullable),
+            StructField(
+                "partition_id", IntegerType(), fields["partition_id"].nullable
+            ),
+            StructField("squared_distance", DoubleType()),
+            StructField("rank", IntegerType(), False),
+        ]
+    )
+    table = pa.Table.from_arrays(
+        [
+            pa.array(np.asarray(qids, dtype=np.int64)[qpos]),
+            pa.array(ids),
+            pa.array(pids.astype(np.int32)),
+            pa.array(dist),
+            pa.array(rank.astype(np.int32)),
+        ],
+        names=schema.names,
+    )
+    return model.encoded.sparkSession.createDataFrame(table, schema=schema)
 
 
 def _small_centroid_rows(
@@ -82,8 +292,6 @@ def _small_centroid_rows(
     relational fallback keeps its exact semantics."""
     import os as _os
 
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
     max_elems = int(
         _os.environ.get("SPARK_GRAFT_ASSIGN_LITERAL_MAX", "65536")
     )
@@ -93,10 +301,7 @@ def _small_centroid_rows(
     if key in memo:
         return memo[key]
     rows = None
-    if isinstance(
-        centroids.schema[pid_col].dataType,
-        (ByteType, ShortType, IntegerType, LongType),
-    ):
+    if isinstance(centroids.schema[pid_col].dataType, _INTEGRAL):
         cap = min(max_elems, 4096)
         rows = centroids.select(pid_col, cent_col).limit(cap + 1).collect()
         if (
@@ -284,17 +489,48 @@ def cent_col_name(centroids: DataFrame) -> str:
     return "centroid" if "centroid" in centroids.columns else centroids.columns[-1]
 
 
+def _check_nprobe(nprobe: int, p: int) -> None:
+    # nprobe < 1 would slice argsort[:, :nprobe] from the END (-1
+    # silently probes P - 1 cells); > P matches the reference's error
+    # (src/db/stored.rs:403-409)
+    if nprobe < 1:
+        raise ValueError(f"nprobe {nprobe} must be at least 1")
+    if nprobe > p:
+        raise ValueError(f"nprobe {nprobe} exceeds num_partitions {p}")
+
+
+def _parse_queries(
+    queries: list[tuple[int, list[float]]] | np.ndarray,
+    query_ids: list[int] | None,
+) -> tuple[np.ndarray, list[int]]:
+    """(Q, N) float64 queries and their Q distinct ids. Ids are the
+    per-query grouping key of every result, so a length mismatch or a
+    repeated id would silently merge or drop queries' results."""
+    if isinstance(queries, np.ndarray):
+        qarr = queries.astype(np.float64)
+        qids = list(query_ids) if query_ids is not None else list(range(len(qarr)))
+        if len(qids) != len(qarr):
+            raise ValueError(
+                f"{len(qids)} query_ids for {len(qarr)} query vectors"
+            )
+    else:
+        qids = [int(q[0]) for q in queries]
+        qarr = np.array([q[1] for q in queries], dtype=np.float64)
+    if len(set(qids)) != len(qids):
+        raise ValueError("query ids must be distinct")
+    return qarr, qids
+
+
 def select_probes(
     model: IndexModel, queries: np.ndarray, nprobe: int
 ) -> tuple[np.ndarray, np.ndarray]:
     """Q1: per query, the nprobe nearest partitions by exact squared L2.
 
     Returns (probe_qidx [Q*nprobe], probe_pid [Q*nprobe]); errors when
-    nprobe > P, matching /root/reference/src/db/stored.rs:403-409.
+    nprobe is outside 1..P.
     """
     p = model.centroids.shape[0]
-    if nprobe > p:
-        raise ValueError(f"nprobe {nprobe} exceeds num_partitions {p}")
+    _check_nprobe(nprobe, p)
     # dimension-major accumulation (d2 += diff^2 per dim) — the exact
     # left-fold the engine's squared_l2 aggregate performs, so near-tie
     # centroid distances order IDENTICALLY to select_probes_df and the
@@ -429,9 +665,7 @@ def _phase1(
         # lazy-centroid serving mode (huge P): Phase 1 is a Spark job;
         # only the O(Q * nprobe) probed (query, partition, centroid)
         # rows are collected, never the full (P, N) table.
-        p = model.config.num_partitions
-        if nprobe > p:
-            raise ValueError(f"nprobe {nprobe} exceeds num_partitions {p}")
+        _check_nprobe(nprobe, model.config.num_partitions)
         rows = select_probes_df(
             model.centroids_df(spark), qarr, nprobe, query_ids=qids
         ).collect()
@@ -472,6 +706,23 @@ def ann_query(
     (Q, N) array with ``query_ids``. Returns (query_id, vector_id,
     partition_id, squared_distance, rank) — the reference's QueryResult
     shape (/root/reference/src/db/build.rs:577-587) plus batch columns.
+    Query ids must be distinct (and, with an array, one per row); ``k``
+    and ``nprobe`` must be at least 1 — anything else raises ValueError.
+
+    Serving paths. A request with ``scorer="auto"`` and no ``where``,
+    ``rerank`` or ``round_to`` on an index whose ``encoded`` DataFrame
+    is persisted (``build_index`` persists it; ``load_index`` does
+    not), whose ids are integral and whose codes fit the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` (``num_vectors x (12 + D
+    code bytes)``; 64 MB from `session.get_spark`) is served from the
+    driver: the first such request collects (id, partition_id, codes)
+    once in one Arrow job, and every later one scores its probed
+    partitions in NumPy and returns an Arrow-backed local relation —
+    no scan, window or shuffle, no Spark job when collected. Ids,
+    distances (the sql scorer's fold order, bit for bit), ranks and
+    schema equal the ``scorer="sql"`` plan's. Every other request runs
+    the Spark plan below; ``encoded.unpersist()`` or an explicit
+    ``scorer`` selects it.
 
     ``where``: optional filtered-search predicate (Column or SQL string)
     over the index's attribute columns, applied to candidates BEFORE
@@ -496,9 +747,10 @@ def ann_query(
 
     ``on_event(stage, seconds)`` mirrors the reference's query event
     handlers (/root/reference/src/db/stored.rs:513-532): fired after the
-    driver phases ``select_probes`` and ``adc_tables`` and after the
-    distributed ``plan_built`` — instrumentation only (the scan itself
-    is lazy; time it at the action with Spark's UI/listeners).
+    driver phases ``select_probes`` and ``adc_tables`` and after
+    ``plan_built`` — instrumentation only (the Spark plan's scan is
+    lazy; time it at the action with Spark's UI/listeners; on the
+    driver path ``plan_built`` covers the scoring itself).
 
     ``rerank``: optional DataFrame holding the ORIGINAL vectors
     (cfg.id_col, cfg.vec_col). When given, the top ``k * rerank_factor``
@@ -520,16 +772,13 @@ def ann_query(
     id), so results are identical. This is the right shape when the
     re-rank source would otherwise be a full scan of the vector corpus.
     """
-    if isinstance(queries, np.ndarray):
-        qarr = queries.astype(np.float64)
-        qids = list(query_ids) if query_ids is not None else list(range(len(qarr)))
-    else:
-        qids = [int(q[0]) for q in queries]
-        qarr = np.array([q[1] for q in queries], dtype=np.float64)
+    qarr, qids = _parse_queries(queries, query_ids)
     if qarr.ndim != 2 or qarr.shape[1] != model.vector_size:
         raise ValueError(
             f"query width {qarr.shape} != vector_size {model.vector_size}"
         )
+    if k < 1:
+        raise ValueError(f"k {k} must be at least 1")
 
     import time as _time
 
@@ -544,6 +793,16 @@ def ann_query(
     probe_qidx, probe_pid, tables = _phase1(
         model, qarr, qids, nprobe, mark=_mark
     )
+    if scorer == "auto" and where is None and rerank is None and round_to is None:
+        res = _resident_codes(model)
+        if res is not None:
+            result = _local_result(
+                model,
+                qids,
+                _score_resident(res, tables, probe_qidx, probe_pid, len(qids), k),
+            )
+            _mark("plan_built")
+            return result
 
     d = model.config.num_divisions
     id_col = model.config.id_col
@@ -827,14 +1086,7 @@ def ann_range_query_batch(
     the exact (rounded) distance. Residual misses are only true
     members whose ADC distance exceeds the slack band — widen
     ``rerank_slack`` to trade scan volume for that tail."""
-    from pyspark.sql import Window
-
-    if isinstance(queries, np.ndarray):
-        qarr = queries.astype(np.float64)
-        qids = list(query_ids) if query_ids is not None else list(range(len(qarr)))
-    else:
-        qids = [int(q[0]) for q in queries]
-        qarr = np.array([q[1] for q in queries], dtype=np.float64)
+    qarr, qids = _parse_queries(queries, query_ids)
     spark = model.encoded.sparkSession
     id_col = model.config.id_col
     id_type = model.encoded.schema[id_col].dataType.simpleString()

@@ -795,3 +795,229 @@ def test_packed_pq_save_load_roundtrip_and_query_equality(
         "partition_id" in ln and " IN (" in ln.split("PartitionFilters")[1]
         for ln in scan_lines
     ), scan_lines
+
+
+# -- driver-resident serving path (cached indexes) ----------------------
+
+
+def _plan_of(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _keyed(rows):
+    # float equality here is bit equality: no rounding anywhere
+    return sorted(
+        (r.query_id, r.rank, r.vector_id, r.partition_id, r.squared_distance)
+        for r in rows
+    )
+
+
+def _assert_resident_parity(m, queries, k, nprobe, query_ids=None):
+    """The driver path (a local relation) returns exactly the sql
+    scorer's ids, distances, ranks and schema on the same model."""
+    events = []
+    local = ann_query(
+        m, queries, k=k, nprobe=nprobe, query_ids=query_ids,
+        on_event=lambda s, dt: events.append(s),
+    )
+    assert events == ["select_probes", "adc_tables", "plan_built"]
+    assert "LocalTableScan" in _plan_of(local)
+    ref = ann_query(m, queries, k=k, nprobe=nprobe, query_ids=query_ids,
+                    scorer="sql")
+    assert "LocalTableScan" not in _plan_of(ref)
+    assert local.schema == ref.schema
+    got = _keyed(local.collect())
+    assert got == _keyed(ref.collect())
+    return got
+
+
+@pytest.fixture(scope="module")
+def qvecs(emb):
+    rows = emb.orderBy("vec_id").limit(64).collect()
+    noise = np.random.RandomState(11).randn(len(rows), 64) * 0.05
+    return np.array([r.embedding for r in rows], dtype=np.float64) + noise
+
+
+def test_resident_parity_single_and_batch(model, qvecs):
+    one = _assert_resident_parity(model, qvecs[:1], k=10, nprobe=2)
+    assert [r[1] for r in one] == list(range(1, 11))
+    # non-contiguous, unordered query ids
+    perm = np.random.RandomState(3).permutation(64)
+    qids = [int(x) for x in perm * 1_000_003 + 10**11]
+    rows = _assert_resident_parity(model, qvecs, k=10, nprobe=4, query_ids=qids)
+    assert {r[0] for r in rows} == set(qids)
+    # nprobe = P scores every partition
+    _assert_resident_parity(model, qvecs[:8], k=10, nprobe=8)
+
+
+def test_resident_parity_k_beyond_candidates(model, qvecs):
+    rows = _assert_resident_parity(model, qvecs[:3], k=10_000, nprobe=1)
+    assert 0 < len(rows) < 3 * 10_000
+    for q in {r[0] for r in rows}:
+        ranks = [r[1] for r in rows if r[0] == q]
+        assert ranks == list(range(1, len(ranks) + 1))
+
+
+def test_resident_parity_ties_break_by_id(model, emb, qvecs):
+    """Every vector twice (ids v and v + 10**6): equal codes, equal
+    distances, so each result pair is ordered by id alone."""
+    from flechasdb_spark.operators.build import assemble_index
+
+    doubled = emb.select("vec_id", "embedding").unionByName(
+        emb.select((F.col("vec_id") + 10**6).alias("vec_id"), "embedding")
+    )
+    m = assemble_index(doubled, model.centroids, model.codebooks, CFG)
+    try:
+        rows = _assert_resident_parity(m, qvecs[:4], k=10, nprobe=3)
+        pairs = list(zip(rows, rows[1:]))
+        # within a query, rank order is (distance, id) order
+        assert all(
+            (a[4], a[2]) < (b[4], b[2]) for a, b in pairs if a[0] == b[0]
+        )
+        assert any(a[4] == b[4] for a, b in pairs if a[0] == b[0])
+    finally:
+        m.encoded.unpersist()
+
+
+def test_resident_parity_opq_and_lazy_centroids(
+    emb, spark, qvecs, tmp_path_factory
+):
+    import dataclasses
+
+    opq = build_index(emb, dataclasses.replace(CFG, balance_dims=True))
+    try:
+        assert opq.dim_perm is not None
+        _assert_resident_parity(opq, qvecs[:16], k=5, nprobe=3)
+        path = str(tmp_path_factory.mktemp("resident_lazy"))
+        save_index(opq, path)
+    finally:
+        opq.encoded.unpersist()
+    lazy = load_index(spark, path, collect_centroids=False)
+    assert lazy.centroids is None
+    lazy.encoded.persist()
+    try:
+        _assert_resident_parity(lazy, qvecs[:16], k=5, nprobe=3)
+    finally:
+        lazy.encoded.unpersist()
+
+
+def _spark_plan(df) -> bool:
+    plan = _plan_of(df)
+    return "LocalTableScan" not in plan and (
+        "WindowGroupLimit" in plan or "PartitionFilters: [" in plan
+    )
+
+
+def test_spark_plan_kept_off_the_resident_path(
+    model, emb, spark, qvecs, tmp_path_factory
+):
+    """Store-loaded, unpersisted and over-budget indexes, and where /
+    rerank / round_to requests keep the distributed plan."""
+    from flechasdb_spark.operators.build import assemble_index
+
+    q = qvecs[:2]
+    path = str(tmp_path_factory.mktemp("resident_store"))
+    save_index(model, path)
+    assert _spark_plan(ann_query(load_index(spark, path), q, k=5, nprobe=2))
+
+    m = assemble_index(emb, model.centroids, model.codebooks, CFG)
+    assert not _spark_plan(ann_query(m, q, k=5, nprobe=2))
+    m.encoded.unpersist()
+    assert _spark_plan(ann_query(m, q, k=5, nprobe=2))
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(model.num_vectors * 8))
+    try:
+        over = ann_query(model, q, k=5, nprobe=2)
+    finally:
+        spark.conf.set(key, old)
+    assert _spark_plan(over)
+    assert not _spark_plan(ann_query(model, q, k=5, nprobe=2))
+
+    for kw in (
+        {"where": F.col("label") >= 0},
+        {"rerank": emb},
+        {"round_to": 4},
+        {"scorer": "sql"},
+        {"scorer": "batch"},
+    ):
+        assert _spark_plan(ann_query(model, q, k=5, nprobe=2, **kw)), kw
+
+
+def test_resident_request_runs_at_most_one_job(model, spark, qvecs):
+    sc = spark.sparkContext
+    q = qvecs[:1]
+    ann_query(model, q, k=10, nprobe=4).collect()  # warm: fill done
+
+    def jobs(group, **kw):
+        sc.setJobGroup(group, group)
+        try:
+            ann_query(model, q, k=10, nprobe=4, **kw).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs("resident-warm") <= 1
+    # the group does capture this thread's jobs: the Spark plan shows
+    assert jobs("resident-sql", scorer="sql") >= 1
+
+
+def test_resident_fill_happens_once_under_concurrency(model, emb, qvecs,
+                                                      monkeypatch):
+    import sys
+    import threading
+    import time
+
+    from flechasdb_spark.operators.build import assemble_index
+    from flechasdb_spark.plans import ivf
+
+    fills = []
+    real = ivf._collect_codes
+
+    def counting(*args):
+        fills.append(1)
+        time.sleep(0.2)  # hold the fill open while the others arrive
+        return real(*args)
+
+    monkeypatch.setattr(ivf, "_collect_codes", counting)
+    m = assemble_index(emb, model.centroids, model.codebooks, CFG)
+    barrier = threading.Barrier(8)
+    out = [None] * 8
+
+    def worker(i):
+        barrier.wait()
+        out[i] = _keyed(ann_query(m, qvecs[:4], k=5, nprobe=3).collect())
+
+    threads = [threading.Thread(target=worker, args=(i,)) for i in range(8)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(switch)
+        m.encoded.unpersist()
+    assert not any(t.is_alive() for t in threads)
+    assert len(fills) == 1
+    assert out[0] and all(o == out[0] for o in out)
+
+
+@pytest.mark.parametrize("scorer", ["auto", "sql"])
+def test_ann_query_rejects_bad_requests(model, qvecs, scorer):
+    q = qvecs[:2]
+    with pytest.raises(ValueError, match="query_ids"):
+        ann_query(model, q, k=5, nprobe=2, query_ids=[1], scorer=scorer)
+    with pytest.raises(ValueError, match="distinct"):
+        ann_query(model, q, k=5, nprobe=2, query_ids=[7, 7], scorer=scorer)
+    with pytest.raises(ValueError, match="distinct"):
+        ann_query(model, [(1, list(q[0])), (1, list(q[1]))], k=5, nprobe=2,
+                  scorer=scorer)
+    with pytest.raises(ValueError, match="k 0"):
+        ann_query(model, q, k=0, nprobe=2, scorer=scorer)
+    with pytest.raises(ValueError, match="nprobe"):
+        ann_query(model, q, k=5, nprobe=0, scorer=scorer)
+    with pytest.raises(ValueError, match="nprobe"):
+        ann_query(model, q, k=5, nprobe=-1, scorer=scorer)
