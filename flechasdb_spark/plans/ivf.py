@@ -88,8 +88,8 @@ def _df_memo(df: DataFrame) -> dict:
 # the same weak per-DataFrame memo: one Arrow collect per cached
 # `encoded` object, dropped with it. Unlike the plan memo above this IS
 # data caching, which is why it is gated on the DataFrame being
-# persisted — Spark's cache already pins the same rows, and
-# ``unpersist()`` turns the path off again.
+# persisted — Spark's cache already pins the same rows — and dropped by
+# the first request that finds the DataFrame unpersisted.
 @dataclass(frozen=True)
 class _ResidentCodes:
     """Every encoded row of a cached index, grouped by partition: rows
@@ -101,6 +101,10 @@ class _ResidentCodes:
 
 
 _INTEGRAL = (ByteType, ShortType, IntegerType, LongType)
+# driver memory one index's resident codes may take: num_vectors x
+# (8 id + 4 partition + D code bytes). 64 MB holds ~2.4M vectors at D=16
+# with one-byte codes; a larger index keeps the Spark plan.
+_RESIDENT_BUDGET_BYTES = 64 << 20
 # candidate rows scored per NumPy pass: bounds the (rows, D) code
 # gather and its index temporaries at ~100 MB for large batches
 _SCORE_CHUNK_ROWS = 1 << 21
@@ -148,26 +152,21 @@ def _collect_codes(
 def _resident_codes(model: IndexModel) -> _ResidentCodes | None:
     """The driver-resident codes of ``model`` when its index may be
     served from the driver, else None. Eligible: ``encoded`` persisted,
-    integral ids, and ``num_vectors x (8 + 4 + code bytes)`` within the
-    session's ``spark.sql.autoBroadcastJoinThreshold`` — the size Spark
-    itself already ships to every executor as a broadcast. The first
-    eligible call collects; concurrent first calls wait for that one
-    collect instead of starting their own."""
+    integral ids, and ``num_vectors x (8 + 4 + code bytes)`` within
+    ``_RESIDENT_BUDGET_BYTES``. The first eligible call collects;
+    concurrent first calls wait for that one collect instead of starting
+    their own. A call on an unpersisted ``encoded`` releases the copy."""
     enc, cfg = model.encoded, model.config
-    if not enc.is_cached or not isinstance(
-        enc.schema[cfg.id_col].dataType, _INTEGRAL
-    ):
+    key = ("resident_codes", cfg.id_col, cfg.num_divisions, cfg.num_codes)
+    if not enc.is_cached:
+        _PLAN_MEMO.get(enc, {}).pop(key, None)
+        return None
+    if not isinstance(enc.schema[cfg.id_col].dataType, _INTEGRAL):
         return None
     row_bytes = 8 + 4 + cfg.num_divisions * _code_dtype(cfg.num_codes).itemsize
-    budget = (
-        enc.sparkSession._jsparkSession.sessionState()
-        .conf()
-        .autoBroadcastJoinThreshold()
-    )
-    if model.num_vectors * row_bytes > budget:
+    if model.num_vectors * row_bytes > _RESIDENT_BUDGET_BYTES:
         return None
     memo = _df_memo(enc)
-    key = ("resident_codes", cfg.id_col, cfg.num_divisions, cfg.num_codes)
     if key not in memo:
         with memo.setdefault("resident_lock", threading.Lock()):
             if key not in memo:
@@ -712,17 +711,17 @@ def ann_query(
     Serving paths. A request with ``scorer="auto"`` and no ``where``,
     ``rerank`` or ``round_to`` on an index whose ``encoded`` DataFrame
     is persisted (``build_index`` persists it; ``load_index`` does
-    not), whose ids are integral and whose codes fit the session's
-    ``spark.sql.autoBroadcastJoinThreshold`` (``num_vectors x (12 + D
-    code bytes)``; 64 MB from `session.get_spark`) is served from the
-    driver: the first such request collects (id, partition_id, codes)
-    once in one Arrow job, and every later one scores its probed
+    not), whose ids are integral and whose codes fit a fixed 64 MB
+    driver budget (``num_vectors x (12 + D code bytes)``) is served
+    from the driver: the first such request collects (id, partition_id,
+    codes) once in one Arrow job, and every later one scores its probed
     partitions in NumPy and returns an Arrow-backed local relation —
     no scan, window or shuffle, no Spark job when collected. Ids,
     distances (the sql scorer's fold order, bit for bit), ranks and
     schema equal the ``scorer="sql"`` plan's. Every other request runs
     the Spark plan below; ``encoded.unpersist()`` or an explicit
-    ``scorer`` selects it.
+    ``scorer`` selects it, and the first such request after
+    ``unpersist()`` releases the driver copy.
 
     ``where``: optional filtered-search predicate (Column or SQL string)
     over the index's attribute columns, applied to candidates BEFORE

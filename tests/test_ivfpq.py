@@ -850,6 +850,26 @@ def test_resident_parity_single_and_batch(model, qvecs):
     _assert_resident_parity(model, qvecs[:8], k=10, nprobe=8)
 
 
+@pytest.mark.parametrize("chunk_rows", [50, 3000])
+def test_resident_parity_across_score_chunks(model, qvecs, monkeypatch,
+                                             chunk_rows):
+    """Scoring split into chunks of ``_SCORE_CHUNK_ROWS`` candidates:
+    50 is below one query's candidates (one query per chunk), 3000
+    spans several queries per chunk. Results equal the sql scorer's."""
+    from flechasdb_spark.plans import ivf
+
+    probe_qidx, probe_pid = select_probes(model, qvecs, 4)
+    sizes = dict(model.encoded.groupBy("partition_id").count().collect())
+    per_query = np.bincount(
+        probe_qidx, weights=[sizes.get(int(p), 0) for p in probe_pid]
+    )
+    # so 50 gives 64 chunks and 3000 at least four
+    assert per_query.min() > 50 and per_query.sum() > 4 * 3000
+    monkeypatch.setattr(ivf, "_SCORE_CHUNK_ROWS", chunk_rows)
+    rows = _assert_resident_parity(model, qvecs, k=10, nprobe=4)
+    assert len(rows) == 64 * 10
+
+
 def test_resident_parity_k_beyond_candidates(model, qvecs):
     rows = _assert_resident_parity(model, qvecs[:3], k=10_000, nprobe=1)
     assert 0 < len(rows) < 3 * 10_000
@@ -909,11 +929,12 @@ def _spark_plan(df) -> bool:
 
 
 def test_spark_plan_kept_off_the_resident_path(
-    model, emb, spark, qvecs, tmp_path_factory
+    model, emb, spark, qvecs, tmp_path_factory, monkeypatch
 ):
     """Store-loaded, unpersisted and over-budget indexes, and where /
     rerank / round_to requests keep the distributed plan."""
     from flechasdb_spark.operators.build import assemble_index
+    from flechasdb_spark.plans import ivf
 
     q = qvecs[:2]
     path = str(tmp_path_factory.mktemp("resident_store"))
@@ -922,17 +943,16 @@ def test_spark_plan_kept_off_the_resident_path(
 
     m = assemble_index(emb, model.centroids, model.codebooks, CFG)
     assert not _spark_plan(ann_query(m, q, k=5, nprobe=2))
+    resident = [k for k in ivf._PLAN_MEMO[m.encoded] if k[0] == "resident_codes"]
+    assert resident
     m.encoded.unpersist()
     assert _spark_plan(ann_query(m, q, k=5, nprobe=2))
+    # the unpersisted index's driver copy is released, not kept pinned
+    assert not any(k in ivf._PLAN_MEMO[m.encoded] for k in resident)
 
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(model.num_vectors * 8))
-    try:
-        over = ann_query(model, q, k=5, nprobe=2)
-    finally:
-        spark.conf.set(key, old)
-    assert _spark_plan(over)
+    with monkeypatch.context() as mp:
+        mp.setattr(ivf, "_RESIDENT_BUDGET_BYTES", model.num_vectors * 8)
+        assert _spark_plan(ann_query(model, q, k=5, nprobe=2))
     assert not _spark_plan(ann_query(model, q, k=5, nprobe=2))
 
     for kw in (
